@@ -27,6 +27,7 @@ from cross_modal_multivector_search_spark.operators import (
     mapping, nsg, quantize, recall, rerank, sampling, set_search,
     sharded, simsearch, stats, text, topk,
 )
+from cross_modal_multivector_search_spark.plans import audit
 from cross_modal_multivector_search_spark.streaming import events as stream_events
 
 K = 10
@@ -2462,7 +2463,6 @@ _PLAN_CACHE_EAGER_OK = {
     "chamfer_varcard", "chamfer_varcard_gemm", "ann_varcard_search",
     "cardinality_mapping", "hnsw_sharded_search", "multimodal_features",
 }
-_EAGER_PLAN_TOKENS = ("LocalRelation", "LogicalRDD", "ExistingRDD")
 
 
 def _shipped(fn: Callable[[SparkSession, str], DataFrame],
@@ -2487,11 +2487,7 @@ def _shipped(fn: Callable[[SparkSession, str], DataFrame],
         if df is None:
             df = fn(spark, sf_dir)
             if name not in _PLAN_CACHE_EAGER_OK:
-                try:
-                    plan = df._jdf.queryExecution().analyzed().toString()
-                except Exception:
-                    plan = ""
-                bad = [t for t in _EAGER_PLAN_TOKENS if t in plan]
+                bad = audit.eager_leaves(audit.analyzed_text(df))
                 if bad:
                     raise RuntimeError(
                         f"prepared-plan cache: {name}'s builder embeds "

@@ -1,8 +1,12 @@
-"""Set-to-set scoring kernels (NumPy) + metric registry.
+"""Set-to-set scoring kernels (NumPy) + the metric registry.
 
-NumPy re-derivations of the reference's Eigen kernels — the Arrow/pandas-UDF
-fast path. The SQL-native (oracle-checkable) formulations of the same math
-live in ``operators/set_search.py``.
+NumPy re-derivations of the reference's Eigen kernels. The batched
+kernels (one GEMM per batch of data sets) are the engine's scorers:
+``SET_METRICS_BATCH`` is the one registry, and ``set_search`` the one
+caller, for both the exact set top-k and the rerank. The scalar
+one-pair kernels ``smooth_chamfer`` / ``summed_max_similarity`` are kept
+as test oracles. The SQL-native (oracle-checkable) formulations of the
+same math live in ``operators/set_search.py``.
 
 Parity targets in the reference:
   * smooth-Chamfer:  `/root/reference/src/multivector_reranker.cpp:330-375`
@@ -97,14 +101,9 @@ def summed_max_similarity_batch(query: np.ndarray, data_concat: np.ndarray,
     ], dtype=np.float64)
 
 
-# Registry mirroring the reference's SetDistanceMetric dispatch
-# (`/root/reference/src/multivector_reranker.cpp:440-503`). All metrics are
-# similarities (higher = better) on pre-normalized rows.
-SET_METRICS: dict[str, Callable[[np.ndarray, np.ndarray], float]] = {
-    "smooth_chamfer": smooth_chamfer,
-    "summed_max_similarity": summed_max_similarity,
-}
-
+# The one metric registry, mirroring the reference's SetDistanceMetric
+# dispatch (see the module docstring). All metrics are similarities
+# (higher = better) on pre-normalized rows.
 SET_METRICS_BATCH: dict[str, Callable[..., np.ndarray]] = {
     "smooth_chamfer": smooth_chamfer_batch,
     "summed_max_similarity": summed_max_similarity_batch,

@@ -19,10 +19,11 @@ hash (xxhash64/murmur) appears in results.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..plans.audit import analyzed_text, eager_leaves
 from .partitioning import ensure_parallelism
 
 
@@ -381,10 +382,12 @@ _GATE_CACHE: dict[tuple, bool] = {}
 
 
 def _plan_key(df: DataFrame) -> str:
+    """Canonical analyzed-plan text, or "" (do not cache) when the plan
+    holds driver-computed leaves: two in-memory frames of one schema
+    print the same text but hold different rows."""
     import re
-    try:
-        txt = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
+    txt = analyzed_text(df)
+    if eager_leaves(txt):
         return ""
     return re.sub(r"#\d+", "", txt)
 
@@ -670,12 +673,19 @@ def embedding_near_dup_pairs(vecs: DataFrame, threshold: float = 0.95,
     return norm.mapInPandas(scan, schema=schema)
 
 
+def _block_of(ids: Column, n_blocks: int) -> Column:
+    """Block of each id: ``pmod(xxhash64(id), B)``. Hashing first keeps
+    residue-skewed ids (all multiples of 16, say) from collapsing into
+    one n^2 block, as a bare ``pmod(id, B)`` would."""
+    return F.pmod(F.xxhash64(ids), F.lit(n_blocks)).cast("int")
+
+
 def _near_dup_blocked_exact(norm: DataFrame, threshold: float,
                             id_col: str,
                             n_blocks: int | None = None) -> DataFrame:
     """Exact all-pairs cosine pairs via block-pair GEMM tasks.
 
-    Every row lands in block ``g = pmod(id, B)``; each unordered block
+    Every row lands in block ``g = _block_of(id, B)``; each unordered block
     pair (lo <= hi) is one shuffle group holding lo's and hi's rows, and
     scores its cross-GEMM there. Every unordered row pair {x, y} occurs
     in exactly ONE group (min/max of their blocks), so output ==
@@ -705,7 +715,7 @@ def _near_dup_blocked_exact(norm: DataFrame, threshold: float,
         B = max(1, int(n_blocks))
     d = norm.select(
         F.col(id_col), "_v",
-        F.pmod(F.col(id_col), F.lit(B)).cast("int").alias("_g"))
+        _block_of(F.col(id_col), B).alias("_g"))
     bp = F.transform(
         F.sequence(F.lit(0), F.lit(B - 1)),
         lambda j: F.struct(F.least(F.col("_g"), j).alias("lo"),

@@ -5,14 +5,16 @@ Reference: `MultiVectorReranker::Rerank`
   1. candidate member-vector ids -> vector-SET ids (fixed m: vsid = vid/m,
      `tests/test_search_multivector_rerank.cpp:241-244`; variable
      cardinality via the mapping table — see operators/mapping.py);
-  2. sort+unique (here: dropDuplicates);
-  3. gather each candidate set's member vectors (a join, not a pointer
-     gather);
-  4. set-to-set score vs the query set; 5. top-k by descending score.
+  2. sort+unique (here: ``collect_set`` of the proposing query sets per
+     data set);
+  3. gather each candidate set's member vectors; 4. set-to-set score vs
+     the query set; 5. top-k by descending score.
 
-The scoring reuses set_search's SQL-native scorers restricted to the
-candidate pairs (a join pre-filter instead of a full cross product) —
-the same "score only candidates" semantics as the reference.
+Steps 3-5 are ``set_search``'s exact scan restricted to the proposed
+pairs (``set_search.proposed_topk``): one scorer, one query-side
+broadcast and one top-k merge serve both the exact set top-k and the
+rerank, as the reference's `Rerank` and `RerankAllBySequentialScan` share
+one kernel.
 """
 
 from __future__ import annotations
@@ -20,25 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .set_search import maxsim_scores_sql, smooth_chamfer_scores_sql
-from .topk import grouped_topk
+from .set_search import proposed_topk
 
 
 def candidates_to_sets(candidates: DataFrame, m: int | None = None,
                        mapping: DataFrame | None = None,
                        query_set_col: str = "query_set_id",
-                       base_vec_col: str = "base_vec_id",
-                       dedup: bool = True) -> DataFrame:
-    """Distinct (query_set_id, data_set_id) candidate pairs.
+                       base_vec_col: str = "base_vec_id") -> DataFrame:
+    """(query_set_id, data_set_id) candidate pairs, with repeats.
 
     Fixed cardinality: set = vid div m. Variable cardinality: broadcast
     join against mapping(first_vid, cardinality, set_id) with a range
-    predicate (first_vid <= vid < first_vid+cardinality).
-
-    ``dedup=False`` skips the final dropDuplicates — a full shuffle of
-    the candidate stream — for consumers that dedup inherently (a
-    set-aggregation or semi join downstream); the pair MULTISET then
-    still maps to the same pair set.
+    predicate (first_vid <= vid < first_vid+cardinality). Repeats are
+    left in: the consumer's set aggregation removes them without a
+    shuffle of its own.
     """
     if mapping is not None:
         j = candidates.join(
@@ -46,137 +43,33 @@ def candidates_to_sets(candidates: DataFrame, m: int | None = None,
             (F.col(base_vec_col) >= mapping.first_vid)
             & (F.col(base_vec_col) < mapping.first_vid + mapping.cardinality),
         )
-        pairs = j.select(query_set_col, F.col("set_id").alias("data_set_id"))
-    elif m is not None:
-        pairs = candidates.select(
+        return j.select(query_set_col, F.col("set_id").alias("data_set_id"))
+    if m is not None:
+        return candidates.select(
             query_set_col,
             (F.col(base_vec_col) / m).cast("long").alias("data_set_id"))
-    else:
-        raise ValueError("need fixed m or a cardinality mapping")
-    if not dedup:
-        return pairs
-    return pairs.dropDuplicates([query_set_col, "data_set_id"])
+    raise ValueError("need fixed m or a cardinality mapping")
 
 
 def rerank(candidates: DataFrame, query_vecs: DataFrame,
            data_vecs: DataFrame, k: int,
            metric: str = "smooth_chamfer", m: int | None = None,
            mapping: DataFrame | None = None,
-           impl: str = "gemm",
            q_sets: list | None = None) -> DataFrame:
     """candidates(query_set_id, base_vec_id) -> top-k reranked sets.
 
-    impl="sql": scoring via the declarative LSE aggregation (restricted
-    to candidate pairs) — the Catalyst-visible / oracle-twin plan.
-    impl="gemm": one shuffle — candidates grouped by data set with their
-    proposing query sets, one NumPy kernel call per (data set, query set)
-    against broadcast query matrices, then window top-k. Identical
-    scores; ~3 stages instead of ~10.
+    One shuffle groups the candidates by data set with their proposing
+    query sets; ``set_search.proposed_topk`` then scores each data set
+    against only those query sets and merges the top-k.
 
     ``q_sets``: optional pre-fetched ``set_search.fetch_grouped_sets``
     list of the SAME query side — build-once / search-many callers (the
     reference loads its query fbin once and benchmarks search alone)
     skip the 2-3 Spark jobs of the per-call grouped Arrow fetch, the
-    same contract ``set_topk_gemm`` already offers. gemm path only.
+    same contract ``set_topk_gemm`` already offers.
     """
-    # dedup=False: BOTH scoring paths dedup inherently (the gemm path's
-    # collect_set per data set; the sql path's semi join), so the
-    # dropDuplicates exchange re-shuffled the same candidate stream for
-    # nothing — removing it drops one full shuffle per rerank (r15)
-    cand_sets = candidates_to_sets(candidates, m=m, mapping=mapping,
-                                   dedup=False)
-    if impl == "gemm":
-        return _rerank_gemm(cand_sets, query_vecs, data_vecs, k, metric,
-                            q_sets=q_sets)
-    # Restrict the data side to candidate sets before scoring: a semi-join
-    # prunes the expensive GEMM/LSE to the candidate universe.
-    cand_data_ids = cand_sets.select(
-        F.col("data_set_id").alias("set_id")).distinct()
-    data_subset = data_vecs.join(F.broadcast(cand_data_ids), "set_id", "semi")
-    scorer = {"smooth_chamfer": smooth_chamfer_scores_sql,
-              "summed_max_similarity": maxsim_scores_sql}[metric]
-    scores = scorer(query_vecs, data_subset)
-    # Keep only (query, candidate-set) pairs that were actually proposed.
-    scoped = scores.join(
-        cand_sets,
-        (scores.q_set == cand_sets.query_set_id)
-        & (scores.d_set == cand_sets.data_set_id),
-        "semi")
-    return grouped_topk(
-        scoped, ["q_set"], [F.col("score").desc(), F.col("d_set").asc()], k
-    ).select(F.col("q_set").alias("query_set_id"), "rank",
-             F.col("d_set").alias("data_set_id"), "score")
-
-
-def _rerank_gemm(cand_sets: DataFrame, query_vecs: DataFrame,
-                 data_vecs: DataFrame, k: int, metric: str,
-                 q_sets: list | None = None) -> DataFrame:
-    """Candidate-pruned NumPy scoring (`MultiVectorReranker::Rerank`'s
-    gather+GEMM, distributed over data sets)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    from ..functions import metrics as M
-
-    from ..util import cached_broadcast
-
-    spark = query_vecs.sparkSession
-    if q_sets is not None:
-        # pre-fetched (set_id, matrix) list: identical content to the
-        # grouped fetch below (same grouping, same vec_id member order).
-        # The cached list broadcasts once per session; workers build the
-        # lookup dict from it (cheap, once per task at most).
-        bc = cached_broadcast(spark, q_sets)
-    else:
-        q_pdf = (query_vecs.groupBy("set_id")
-                 .agg(F.sort_array(F.collect_list(F.struct(
-                     F.col("vec_id").alias("o"), F.col("vec").alias("v"))))
-                     .alias("rows"))
-                 .select("set_id", F.col("rows.v").alias("mat")).toPandas())
-        q_mats = {int(s): np.array([np.asarray(v) for v in m],
-                                   dtype=np.float64)
-                  for s, m in zip(q_pdf["set_id"], q_pdf["mat"])}
-        bc = spark.sparkContext.broadcast(q_mats)
-
-    # one shuffle: each candidate data set carries its proposing queries
-    per_data = (cand_sets.groupBy("data_set_id")
-                .agg(F.collect_set("query_set_id").alias("qsids")))
-    data_grouped = (data_vecs.groupBy(F.col("set_id").alias("data_set_id"))
-                    .agg(F.sort_array(F.collect_list(F.struct(
-                        F.col("vec_id").alias("o"),
-                        F.col("vec").alias("v")))).alias("rows"))
-                    .select("data_set_id", F.col("rows.v").alias("mat")))
-    work = per_data.join(data_grouped, "data_set_id")
-
-    schema = StructType([
-        StructField("query_set_id", LongType()),
-        StructField("data_set_id", LongType()),
-        StructField("score", DoubleType()),
-    ])
-
-    def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        val = bc.value
-        q_mats_l = ({int(s): np.asarray(m, dtype=np.float64)
-                     for s, m in val} if isinstance(val, list) else val)
-        fn = M.SET_METRICS[metric]
-        for pdf in it:
-            out_q, out_d, out_s = [], [], []
-            for dsid, qsids, mat in zip(pdf["data_set_id"], pdf["qsids"],
-                                        pdf["mat"]):
-                d = np.stack([np.asarray(r, dtype=np.float64) for r in mat])
-                for qsid in qsids:
-                    out_q.append(int(qsid))
-                    out_d.append(int(dsid))
-                    out_s.append(fn(q_mats_l[int(qsid)], d))
-            yield pd.DataFrame({"query_set_id": out_q,
-                                "data_set_id": out_d, "score": out_s})
-
-    scored = work.mapInPandas(score, schema=schema)
-    return grouped_topk(
-        scored, ["query_set_id"],
-        [F.col("score").desc(), F.col("data_set_id").asc()], k
-    ).select("query_set_id", "rank", "data_set_id", "score")
+    proposals = (candidates_to_sets(candidates, m=m, mapping=mapping)
+                 .groupBy(F.col("data_set_id").alias("set_id"))
+                 .agg(F.collect_set("query_set_id").alias("qsids")))
+    return proposed_topk(query_vecs if q_sets is None else q_sets,
+                         data_vecs, proposals, k, metric)

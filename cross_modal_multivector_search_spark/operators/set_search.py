@@ -19,6 +19,9 @@ Physical strategies:
     sets streamed via ``applyInPandas``-free mapInPandas over pre-grouped
     set rows; one GEMM per Arrow batch of data sets (the reference's
     batch variant `:377-430`), per-batch partial top-k, global merge.
+  * ``proposed_topk`` — the rerank (`MultiVectorReranker::Rerank`
+    `:38-98`): the same scan, each query set scoring only the data sets
+    it proposed. One scoring body serves both, as in the reference.
 """
 
 from __future__ import annotations
@@ -105,12 +108,16 @@ def set_topk_sql(query_vecs: DataFrame, data_vecs: DataFrame, k: int,
 
 def _grouped_sets(vec_df: DataFrame, set_id: str, pos: str | None,
                   vec_col: str) -> DataFrame:
-    """(set_id, mat: array<array<double>>) with deterministic member order."""
+    """(set_id, mat: array<array<...>>) with deterministic member order.
+
+    Members keep their stored precision through the shuffle (float rows
+    are half the bytes of double ones); the NumPy side widens them to
+    float64, which is exact, as a Spark cast to double would be."""
     order_col = F.col(pos) if pos else F.col("vec_id")
     return (
         vec_df.groupBy(F.col(set_id).alias("set_id"))
         .agg(F.sort_array(F.collect_list(F.struct(
-            order_col.alias("o"), V.to_double(F.col(vec_col)).alias("v")
+            order_col.alias("o"), F.col(vec_col).alias("v")
         ))).alias("rows"))
         .select("set_id", F.col("rows.v").alias("mat"))
     )
@@ -144,19 +151,60 @@ def set_topk_gemm(query_vecs, data_vecs: DataFrame, k: int,
     (`ComputeSmoothChamferDistanceBatch` shape), LSE'd block-wise, and only
     the per-batch top-k per query survives to the final merge.
     """
+    return _scan_topk(query_vecs, _grouped_sets(data_vecs, set_id, pos,
+                                                vec_col),
+                      k, metric, set_id, pos, vec_col)
+
+
+def proposed_topk(query_vecs, data_vecs: DataFrame, proposals: DataFrame,
+                  k: int, metric: str = "smooth_chamfer") -> DataFrame:
+    """The same scan restricted to proposed (query set, data set) pairs:
+    the rerank phase (`MultiVectorReranker::Rerank`).
+
+    ``proposals``: (set_id, qsids) — each data set with the query set
+    ids that proposed it. Data sets nobody proposed drop out in the
+    join; each query set then scores only the sets it proposed."""
+    return _scan_topk(query_vecs,
+                      _grouped_sets(data_vecs, "set_id", None, "vec")
+                      .join(proposals, "set_id"),
+                      k, metric)
+
+
+def _proposed(qsids, q_mats: dict, d_ids: np.ndarray, concat: np.ndarray,
+              cards: np.ndarray) -> Iterator[tuple]:
+    """For each query set listed in a batch's ``qsids`` column: its id and
+    matrix, then the ids, stacked members and cardinalities of the batch's
+    sets it proposed, the members gathered from ``concat`` by offset."""
+    offsets = np.concatenate(([0], np.cumsum(cards)))
+    sel_of: dict[int, list[int]] = {}
+    for i, qs in enumerate(qsids):
+        for q in qs:
+            sel_of.setdefault(int(q), []).append(i)
+    for q, sel in sel_of.items():
+        rows = np.concatenate([np.arange(offsets[i], offsets[i + 1])
+                               for i in sel])
+        yield q, q_mats[q], d_ids[sel], concat[rows], cards[sel]
+
+
+def _scan_topk(query_vecs, sets: DataFrame, k: int, metric: str,
+               set_id: str = "set_id", pos: str | None = None,
+               vec_col: str = "vec") -> DataFrame:
+    """The one set scorer: ``sets`` (set_id, mat[, qsids]) streamed one
+    Arrow batch at a time against the broadcast query sets, a per-batch
+    top-k per query set, then the global ``grouped_topk`` merge. With a
+    ``qsids`` column a query set scores only the rows that list it,
+    gathered from the batch's stacked members by offset."""
     if metric not in M.SET_METRICS_BATCH:
         raise ValueError(f"unknown metric {metric!r}")
     from ..util import cached_broadcast
 
-    if isinstance(query_vecs, list):
-        q_sets = query_vecs
-    else:
-        q_sets = fetch_grouped_sets(query_vecs, set_id, pos, vec_col)
-    spark = data_vecs.sparkSession
+    spark = sets.sparkSession
     # a pre-fetched (build-once) query list broadcasts once per session;
     # metric/k ride in the closure
-    bc = (cached_broadcast(spark, q_sets) if isinstance(query_vecs, list)
-          else spark.sparkContext.broadcast(q_sets))
+    bc = (cached_broadcast(spark, query_vecs) if isinstance(query_vecs, list)
+          else spark.sparkContext.broadcast(
+              fetch_grouped_sets(query_vecs, set_id, pos, vec_col)))
+    proposed = "qsids" in sets.columns
 
     schema = StructType([
         StructField("query_set_id", LongType()),
@@ -167,29 +215,32 @@ def set_topk_gemm(query_vecs, data_vecs: DataFrame, k: int,
     def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_sets_l, met, kk = bc.value, metric, k
         fn = M.SET_METRICS_BATCH[met]
+        q_mats = dict(q_sets_l) if proposed else None
         for pdf in it:
             d_ids = pdf["set_id"].to_numpy(dtype=np.int64)
             mats = [np.stack([np.asarray(r, dtype=np.float64) for r in m])
                     for m in pdf["mat"]]
             cards = np.array([m.shape[0] for m in mats], dtype=np.int64)
             concat = np.vstack(mats)
+            work = (_proposed(pdf["qsids"], q_mats, d_ids, concat, cards)
+                    if proposed else
+                    ((q, qmat, d_ids, concat, cards) for q, qmat in q_sets_l))
             frames = []
-            for qid, qmat in q_sets_l:
-                scores = fn(qmat, concat, cards)
+            for qid, qmat, ids, data, data_cards in work:
+                scores = fn(qmat, data, data_cards)
                 kk_eff = min(kk, len(scores))
                 # deterministic tiebreak (score desc, id asc) — see
                 # brute_force.py: argpartition drops ties arbitrarily
-                top = np.lexsort((d_ids, -scores))[:kk_eff]
+                top = np.lexsort((ids, -scores))[:kk_eff]
                 frames.append(pd.DataFrame({
                     "query_set_id": np.full(kk_eff, qid, dtype=np.int64),
-                    "data_set_id": d_ids[top],
+                    "data_set_id": ids[top],
                     "score": scores[top],
                 }))
             if frames:
                 yield pd.concat(frames)
 
-    partials = _grouped_sets(data_vecs, set_id, pos, vec_col).mapInPandas(
-        score_batches, schema=schema)
+    partials = sets.mapInPandas(score_batches, schema=schema)
     return grouped_topk(
         partials, ["query_set_id"],
         [F.col("score").desc(), F.col("data_set_id").asc()], k,

@@ -35,6 +35,7 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
 
 from . import _roar_core as core
 from .graph_build import RoarGraphParams
+from .set_search import fetch_grouped_sets
 from .topk import grouped_topk
 
 _SHARD_GRAPH_SCHEMA = StructType([
@@ -437,18 +438,10 @@ def search_sharded(shard_graph: DataFrame, base: DataFrame,
     work layout itself (the ``_qblock`` column), so it can never
     disagree with how the work table was built."""
     spark = base.sparkSession
-    if isinstance(query_vecs, list):
-        q_sets = [(int(s), np.asarray(m, dtype=np.float64))
-                  for s, m in query_vecs]
-    else:
-        q_pdf = (query_vecs.groupBy(F.col(set_id).alias("qsid"))
-                 .agg(F.sort_array(F.collect_list(F.struct(
-                     F.col(vec_id).alias("o"), F.col(vec_col).alias("v"))))
-                     .alias("rows"))
-                 .select("qsid", F.col("rows.v").alias("mats")).toPandas())
-        q_sets = [(int(s), np.array([np.asarray(v) for v in m],
-                                    dtype=np.float64))
-                  for s, m in zip(q_pdf["qsid"], q_pdf["mats"])]
+    if not isinstance(query_vecs, list):
+        query_vecs = fetch_grouped_sets(query_vecs, set_id, vec_id, vec_col)
+    q_sets = [(int(s), np.asarray(m, dtype=np.float64))
+              for s, m in query_vecs]
     if routes is not None:
         # a set missing from routes would silently search NO shard and
         # return zero rows — fail loudly instead (stale/filtered routes)

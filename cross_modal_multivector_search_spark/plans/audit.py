@@ -13,9 +13,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+# Analyzed-plan leaves that hold driver-computed data: a plan holding one
+# is not a function of its text, so no cache may key on that text.
+EAGER_PLAN_TOKENS = ("LocalRelation", "LogicalRDD", "ExistingRDD")
+
+
 def plan_text(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), mode)
+
+
+def analyzed_text(df: DataFrame) -> str:
+    """The analyzed logical plan as text, or "" when it cannot be read."""
+    try:
+        return df._jdf.queryExecution().analyzed().toString()
+    except Exception:
+        return ""
+
+
+def eager_leaves(plan: str) -> list[str]:
+    """The ``EAGER_PLAN_TOKENS`` found in an analyzed plan's text."""
+    return [t for t in EAGER_PLAN_TOKENS if t in plan]
 
 
 def assert_in_plan(df: DataFrame, *needles: str) -> None:

@@ -16,7 +16,10 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "cross-modal-multivector-search-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default to the CPUs this process may run on, not a fixed count:
+    # more task slots than cores only adds scheduler thrash
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     # Tasks are the parallelism unit: with `cpus` concurrent Python

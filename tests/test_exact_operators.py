@@ -71,21 +71,73 @@ def test_set_topk_self_is_rank1(vecs):
     assert (r1.query_set_id == r1.data_set_id).all()
 
 
-def test_rerank_recovers_exact_topk_when_candidates_cover(vecs):
+METRICS = ["smooth_chamfer", "summed_max_similarity"]
+
+
+def _by_rank(df):
+    key = ["query_set_id", "rank"]
+    return df.sort_values(key).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("metric", METRICS)
+def test_rerank_recovers_exact_topk_when_candidates_cover(vecs, metric):
     """With full coverage candidates, rerank == exhaustive set top-k."""
     q = vecs.filter(F.col("set_id") < 3)
-    exact = set_search.set_topk_sql(q, vecs, 5).toPandas()
+    exact = set_search.set_topk_sql(q, vecs, 5, metric=metric).toPandas()
     cands = (
         q.select(F.col("set_id").alias("query_set_id"))
         .distinct()
         .crossJoin(vecs.select(F.col("vec_id").alias("base_vec_id")))
     )
-    rr = rerank.rerank(cands, q, vecs, 5, m=TD.M_FIXED).toPandas()
-    key = ["query_set_id", "rank"]
-    pd.testing.assert_frame_equal(
-        exact.sort_values(key).reset_index(drop=True),
-        rr.sort_values(key).reset_index(drop=True),
-        check_dtype=False, atol=1e-9)
+    rr = rerank.rerank(cands, q, vecs, 5, metric=metric,
+                       m=TD.M_FIXED).toPandas()
+    pd.testing.assert_frame_equal(_by_rank(exact), _by_rank(rr),
+                                  check_dtype=False, atol=1e-9)
+
+
+@pytest.mark.parametrize("metric", METRICS)
+def test_rerank_variable_cardinality_through_mapping(spark, metric):
+    """Sets of 1..4 members, candidates mapped to sets through the
+    cardinality mapping: full coverage recovers the exact top-k."""
+    from cross_modal_multivector_search_spark.operators import mapping
+    v = TD.embeddings_norm(spark, SF_SMOKE).filter(
+        F.col("vec_id") < 200).drop("set_id")
+    cards = [(s, 1 + s % 4) for s in range(80)]     # 200 vectors
+    m_map = mapping.cardinality_mapping_local(spark, cards)
+    data = mapping.vid_to_vsid_variable(v, m_map)
+    q = data.filter(F.col("set_id").isin(1, 2, 7))
+    exact = set_search.set_topk_sql(q, data, 5, metric=metric).toPandas()
+    cands = (q.select(F.col("set_id").alias("query_set_id")).distinct()
+             .crossJoin(v.select(F.col("vec_id").alias("base_vec_id"))))
+    rr = rerank.rerank(cands, q, data, 5, metric=metric,
+                       mapping=m_map).toPandas()
+    pd.testing.assert_frame_equal(_by_rank(exact), _by_rank(rr),
+                                  check_dtype=False, atol=1e-9)
+
+
+@pytest.mark.parametrize("metric", METRICS)
+def test_rerank_partial_candidates_score_like_exact_scan(vecs, metric):
+    """Each query set proposes its own few data sets: rerank returns only
+    proposed sets, and every score equals the exact scan's score for that
+    pair."""
+    q = vecs.filter(F.col("set_id") < 4)
+    n_sets = vecs.select("set_id").distinct().count()
+    cands = (q.select(F.col("set_id").alias("query_set_id")).distinct()
+             .crossJoin(vecs.select(F.col("vec_id").alias("base_vec_id")))
+             .filter((F.col("base_vec_id") / TD.M_FIXED).cast("long") % 3
+                     == F.col("query_set_id") % 3))
+    proposed = {(r[0], r[1]) for r in rerank.candidates_to_sets(
+        cands, m=TD.M_FIXED).collect()}
+    rr = rerank.rerank(cands, q, vecs, 5, metric=metric,
+                       m=TD.M_FIXED).toPandas()
+    exact = set_search.set_topk_gemm(q, vecs, n_sets,
+                                     metric=metric).toPandas()
+    want = {(a, b): s for a, b, s in zip(
+        exact.query_set_id, exact.data_set_id, exact.score)}
+    assert len(rr) == 4 * 5
+    for a, b, s in zip(rr.query_set_id, rr.data_set_id, rr.score):
+        assert (a, b) in proposed
+        assert abs(s - want[(a, b)]) <= 1e-9
 
 
 def test_recall_perfect_and_zero(spark):

@@ -73,6 +73,31 @@ def test_connected_components_local_gate_equivalence(spark):
     assert (5, 1) in loc and (11, 10) in loc and (20, 20) in loc
 
 
+def test_connected_components_gate_per_in_memory_input(spark, monkeypatch):
+    """Two in-memory edge lists of one schema print the same analyzed
+    plan, so the gate must not reuse one's decision for the other: the
+    one under ``local_threshold`` takes the in-task union-find, the one
+    over it the distributed loop."""
+    calls = []
+    real = dedup._resolve_edges_small
+
+    def spy(slim, emit):
+        calls.append(1)
+        return real(slim, emit)
+
+    monkeypatch.setattr(dedup, "_resolve_edges_small", spy)
+    small = spark.createDataFrame([(1, 2)], "a long, b long")
+    big = spark.createDataFrame([(i, i + 1) for i in range(10)],
+                                "a long, b long")
+    got = dedup.connected_components(small, local_threshold=5).collect()
+    assert len(calls) == 1
+    assert {(r["node"], r["component"]) for r in got} == {(1, 1), (2, 1)}
+    got = dedup.connected_components(big, local_threshold=5).collect()
+    assert len(calls) == 1
+    assert {(r["node"], r["component"]) for r in got} == \
+        {(i, 0) for i in range(11)}
+
+
 def test_curate_corpus_planted(spark):
     """Exact dup -> keep min id; German and junk docs filtered; clean
     English doc survives with its features."""
@@ -1345,6 +1370,28 @@ def test_embedding_near_dup_blocked_equals_sql_and_gemm(spark):
             dedup.embedding_near_dup_pairs(v, 0.4, impl="blocked")
             .collect()}
     assert auto == want
+
+
+def test_embedding_near_dup_blocked_spreads_skewed_ids(spark):
+    """Ids that are all multiples of 16 spread over several blocks for
+    every B that divides 16, and impl="blocked" still returns exactly
+    impl="gemm"'s pairs on them."""
+    rng = np.random.default_rng(7)
+    mat = rng.standard_normal((64, 8))
+    mat[1::2] = mat[::2] + 0.1 * rng.standard_normal((32, 8))
+    v = spark.createDataFrame(
+        [(16 * i, row.tolist()) for i, row in enumerate(mat)],
+        "vec_id long, vec array<double>")
+    for blocks in (2, 4, 8, 16):
+        n = v.select(dedup._block_of(F.col("vec_id"), blocks)) \
+            .distinct().count()
+        assert n > 1, f"B={blocks}: every id in one block"
+    want = {(r["a"], r["b"], round(r["cos"], 9)) for r in
+            dedup.embedding_near_dup_pairs(v, 0.9, impl="gemm").collect()}
+    got = {(r["a"], r["b"], round(r["cos"], 9)) for r in
+           dedup.embedding_near_dup_pairs(v, 0.9, impl="blocked")
+           .collect()}
+    assert want and got == want
 
 
 def test_tfidf_shared_subtrees_keep_live_tf_refs(spark, tmp_path):
