@@ -668,8 +668,7 @@ def q_ann_multivector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -688,8 +687,7 @@ def q_ann_window_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=600, budget=600), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=600, budget=600), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -714,8 +712,7 @@ def q_nsg_multivector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -741,8 +738,7 @@ def q_ann_distbuild_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -813,8 +809,7 @@ def q_ann_bootstrap_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1011,7 +1006,7 @@ def q_ann_varcard_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = graph_search.search_and_rerank(
         index, q, varv, K,
         graph_search.SearchParams(min_pq=5, max_pq=400, budget=400),
-        mapping=m_map, q_sets=_qsets("varcard", sf_dir, q))
+        mapping=m_map)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 

@@ -105,8 +105,7 @@ def main() -> None:
         q, v = E._queries_norm(spark, sf_dir)
         return _gs.search_and_rerank(
             index, q, v, E.K,
-            _gs.SearchParams(min_pq=5, max_pq=1600, budget=1600), m=E.M,
-            q_sets=E._qsets("fixed", sf_dir, q))
+            _gs.SearchParams(min_pq=5, max_pq=1600, budget=1600), m=E.M)
 
     timed = {name: qs[name] for name in HEADLINE}
     # same prepared-plan protocol as the queries() rows (E._shipped)

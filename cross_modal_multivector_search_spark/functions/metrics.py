@@ -1,11 +1,12 @@
 """Set-to-set scoring kernels (NumPy) + the metric registry.
 
 NumPy re-derivations of the reference's Eigen kernels. The batched
-kernels (one GEMM per batch of data sets) are the engine's scorers:
-``SET_METRICS_BATCH`` is the one registry, and ``set_search`` the one
-caller, for both the exact set top-k and the rerank. The scalar
-one-pair kernels ``smooth_chamfer`` / ``summed_max_similarity`` are kept
-as test oracles. The SQL-native (oracle-checkable) formulations of the
+kernels (one GEMM per batch of data sets, then the reductions over one
+``(m, sets, c)`` block per distinct set cardinality) are the engine's
+scorers: ``SET_METRICS_BATCH`` is the one registry, and
+``set_search.topk_of`` the one caller, for the exact set top-k, the
+rerank and the fused search. The scalar one-pair kernels
+``smooth_chamfer`` / ``summed_max_similarity`` are kept as test oracles. The SQL-native (oracle-checkable) formulations of the
 same math live in ``operators/set_search.py``.
 
 Parity targets in the reference:
@@ -57,32 +58,48 @@ def smooth_chamfer(query: np.ndarray, data: np.ndarray,
     return float((term1 + term2) / denominator)
 
 
+def _blocks_by_cardinality(sims: np.ndarray, cardinalities: np.ndarray):
+    """Yield ``(positions, blocks)`` per distinct cardinality c: the
+    positions of the batch's sets with c members and their similarity
+    columns as one ``(m, len(positions), c)`` array. Each set's members
+    are ``c`` consecutive columns of ``sims``."""
+    cards = np.asarray(cardinalities, dtype=np.int64)
+    offsets = np.concatenate(([0], np.cumsum(cards)[:-1]))
+    for c in np.unique(cards):
+        pos = np.flatnonzero(cards == c)
+        yield pos, sims[:, offsets[pos][:, None] + np.arange(c)]
+
+
 def smooth_chamfer_batch(query: np.ndarray, data_concat: np.ndarray,
                          cardinalities: np.ndarray,
                          temperature: float = SMOOTH_CHAMFER_TEMPERATURE,
                          txt_scale: float = SMOOTH_CHAMFER_TXT_SCALE,
                          denominator: float = SMOOTH_CHAMFER_DENOMINATOR) -> np.ndarray:
-    """One GEMM for a whole batch of data sets, then per-set column blocks.
+    """One GEMM for a whole batch of data sets, then block-wise LSE.
 
     ``data_concat`` stacks the member vectors of many data sets; the i-th
     set occupies ``cardinalities[i]`` consecutive rows. Mirrors
-    `ComputeSmoothChamferDistanceBatch` — one big ``query @ batch.T`` then
-    block-wise LSE, which is the whole point of batching (amortized GEMM).
+    `ComputeSmoothChamferDistanceBatch` — one big ``query @ batch.T``
+    (amortized GEMM). The two log-sum-exp reductions then run once per
+    distinct cardinality over an ``(m, sets, c)`` block instead of once
+    per set; for query and data cardinalities below 8 every reduction
+    adds in the same order as one set at a time, so scores are
+    bit-equal to ``smooth_chamfer`` block by block.
     """
     sims = query @ data_concat.T               # (m, total_rows)
     m = query.shape[0]
     out = np.empty(len(cardinalities), dtype=np.float64)
-    offsets = np.concatenate(([0], np.cumsum(cardinalities)))
     ts = temperature * txt_scale
-    for i in range(len(cardinalities)):
-        blk = sims[:, offsets[i]:offsets[i + 1]]
+    for pos, blk in _blocks_by_cardinality(sims, cardinalities):
         t1 = ts * blk
-        rmax = t1.max(axis=1)
-        term1 = (np.log(np.exp(t1 - rmax[:, None]).sum(axis=1)) + rmax).sum() / (m * ts)
+        rmax = t1.max(axis=2)
+        row = np.log(np.exp(t1 - rmax[:, :, None]).sum(axis=2)) + rmax
+        term1 = row.sum(axis=0) / (m * ts)
         t2 = temperature * blk
         cmax = t2.max(axis=0)
-        term2 = (np.log(np.exp(t2 - cmax[None, :]).sum(axis=0)) + cmax).sum() / (m * temperature)
-        out[i] = (term1 + term2) / denominator
+        col = np.log(np.exp(t2 - cmax[None]).sum(axis=0)) + cmax
+        term2 = col.sum(axis=1) / (m * temperature)
+        out[pos] = (term1 + term2) / denominator
     return out
 
 
@@ -93,12 +110,13 @@ def summed_max_similarity(query: np.ndarray, data: np.ndarray) -> float:
 
 def summed_max_similarity_batch(query: np.ndarray, data_concat: np.ndarray,
                                 cardinalities: np.ndarray) -> np.ndarray:
+    """MaxSim for a batch of data sets: one GEMM, one max/sum per
+    distinct cardinality (see ``smooth_chamfer_batch``)."""
     sims = query @ data_concat.T
-    offsets = np.concatenate(([0], np.cumsum(cardinalities)))
-    return np.array([
-        sims[:, offsets[i]:offsets[i + 1]].max(axis=1).sum()
-        for i in range(len(cardinalities))
-    ], dtype=np.float64)
+    out = np.empty(len(cardinalities), dtype=np.float64)
+    for pos, blk in _blocks_by_cardinality(sims, cardinalities):
+        out[pos] = blk.max(axis=2).sum(axis=0)
+    return out
 
 
 # The one metric registry, mirroring the reference's SetDistanceMetric

@@ -11,14 +11,21 @@ Reference: `MultiVectorReranker::Rerank`
      the query set; 5. top-k by descending score.
 
 Steps 3-5 are ``set_search``'s exact scan restricted to the proposed
-pairs (``set_search.proposed_topk``): one scorer, one query-side
-broadcast and one top-k merge serve both the exact set top-k and the
-rerank, as the reference's `Rerank` and `RerankAllBySequentialScan` share
-one kernel.
+pairs (``set_search.proposed_topk``): one scorer (``set_search.topk_of``)
+serves the exact set top-k, this rerank and the fused
+``graph_search.search_and_rerank``, as the reference's `Rerank` and
+`RerankAllBySequentialScan` share one kernel.
+
+``rerank`` takes candidates from any source (RoarGraph, HNSW, NSG,
+sharded search) as a DataFrame, so it keeps the two-stage shape: a
+shuffle groups the candidates by data set, and a second Python stage
+scores them. The RoarGraph flagship path skips both through the fused
+stage; ``vids_to_sets`` is its in-task twin of ``candidates_to_sets``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,6 +56,34 @@ def candidates_to_sets(candidates: DataFrame, m: int | None = None,
             query_set_col,
             (F.col(base_vec_col) / m).cast("long").alias("data_set_id"))
     raise ValueError("need fixed m or a cardinality mapping")
+
+
+def collect_ranges(mapping: DataFrame) -> tuple:
+    """mapping(first_vid, cardinality, set_id) fetched for
+    ``vids_to_sets``: (first vids ascending, their cardinalities, set
+    ids) of the non-empty ranges."""
+    pdf = mapping.select("first_vid", "cardinality", "set_id").toPandas()
+    first, card, sid = (pdf[c].to_numpy(dtype=np.int64)
+                        for c in ("first_vid", "cardinality", "set_id"))
+    order = np.argsort(first, kind="stable")
+    order = order[card[order] > 0]
+    return first[order], card[order], sid[order]
+
+
+def vids_to_sets(vids: np.ndarray, m: int | None,
+                 ranges: tuple | None) -> np.ndarray:
+    """NumPy twin of ``candidates_to_sets`` for one query set's
+    candidate vids: the distinct data set ids, ascending. With
+    ``ranges`` (``collect_ranges``) a vid maps to the range that holds
+    it and vids outside every range drop, as the range join drops
+    them; otherwise set = vid div m."""
+    if ranges is None:
+        return np.unique(vids // m)
+    first, card, sid = ranges
+    pos = np.searchsorted(first, vids, side="right") - 1
+    ok = pos >= 0
+    ok[ok] = vids[ok] < first[pos[ok]] + card[pos[ok]]
+    return np.unique(sid[pos[ok]])
 
 
 def rerank(candidates: DataFrame, query_vecs: DataFrame,

@@ -21,12 +21,18 @@ Physical strategies:
     batch variant `:377-430`), per-batch partial top-k, global merge.
   * ``proposed_topk`` — the rerank (`MultiVectorReranker::Rerank`
     `:38-98`): the same scan, each query set scoring only the data sets
-    it proposed. One scoring body serves both, as in the reference.
+    it proposed.
+
+``topk_of`` is the one scoring body (batched kernel over members
+gathered by offset, then the (score desc, id asc) top-k): both scans
+above call it per Arrow batch, and the fused
+``graph_search.search_and_rerank`` calls it per query set against a
+broadcast ``fetch_stacked_sets`` of the data side.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -170,30 +176,95 @@ def proposed_topk(query_vecs, data_vecs: DataFrame, proposals: DataFrame,
                       k, metric)
 
 
-def _proposed(qsids, q_mats: dict, d_ids: np.ndarray, concat: np.ndarray,
-              cards: np.ndarray) -> Iterator[tuple]:
-    """For each query set listed in a batch's ``qsids`` column: its id and
-    matrix, then the ids, stacked members and cardinalities of the batch's
-    sets it proposed, the members gathered from ``concat`` by offset."""
-    offsets = np.concatenate(([0], np.cumsum(cards)))
-    sel_of: dict[int, list[int]] = {}
-    for i, qs in enumerate(qsids):
-        for q in qs:
-            sel_of.setdefault(int(q), []).append(i)
-    for q, sel in sel_of.items():
-        rows = np.concatenate([np.arange(offsets[i], offsets[i + 1])
-                               for i in sel])
-        yield q, q_mats[q], d_ids[sel], concat[rows], cards[sel]
+class StackedSets(NamedTuple):
+    """Decoded data sets: the members of set ``ids[i]`` are rows
+    ``offsets[i] : offsets[i] + cards[i]`` of ``concat``."""
+    ids: np.ndarray
+    concat: np.ndarray
+    cards: np.ndarray
+    offsets: np.ndarray
+
+
+def _stacked(ids: np.ndarray, concat: np.ndarray,
+             cards: np.ndarray) -> StackedSets:
+    return StackedSets(ids, concat, cards, np.cumsum(cards) - cards)
+
+
+def _decode_sets(pdf: pd.DataFrame) -> StackedSets:
+    """One Arrow batch of ``_grouped_sets`` rows, widened to float64."""
+    mats = [np.stack([np.asarray(r, dtype=np.float64) for r in m])
+            for m in pdf["mat"]]
+    return _stacked(pdf["set_id"].to_numpy(dtype=np.int64), np.vstack(mats),
+                    np.array([len(m) for m in mats], dtype=np.int64))
+
+
+def fetch_stacked_sets(data_vecs: DataFrame) -> StackedSets:
+    """Arrow-fetch data_vecs(set_id, vec_id, vec) in one job with no
+    shuffle, grouped as ``_grouped_sets`` groups it: sets by ascending
+    id, members by ascending vec_id, widened to float64."""
+    pdf = data_vecs.select("set_id", "vec_id", "vec").toPandas()
+    sids = pdf["set_id"].to_numpy(dtype=np.int64)
+    order = np.lexsort((pdf["vec_id"].to_numpy(dtype=np.int64), sids))
+    ids, cards = np.unique(sids, return_counts=True)
+    concat = (np.stack(pdf["vec"].to_numpy()[order]).astype(np.float64)
+              if len(pdf) else np.empty((0, 0), dtype=np.float64))
+    return _stacked(ids, concat, cards)
+
+
+def gather_rows(sets: StackedSets, sel: np.ndarray) -> np.ndarray:
+    """Row indices into ``sets.concat`` of the members of sets ``sel``,
+    set after set: one repeat of each set's shift plus one arange."""
+    c = sets.cards[sel]
+    return np.repeat(sets.offsets[sel] - (np.cumsum(c) - c), c) \
+        + np.arange(c.sum())
+
+
+def topk_of(metric: str, qmat: np.ndarray, sets: StackedSets,
+            sel: np.ndarray | None, k: int) -> tuple:
+    """The one set scorer: score ``qmat`` against the sets ``sel`` (every
+    set when None), members gathered by offset, and keep the top k by
+    (score desc, id asc) — argpartition would drop ties arbitrarily, see
+    brute_force.py. Returns (ids, scores)."""
+    if sel is None:
+        ids, data, cards = sets.ids, sets.concat, sets.cards
+    else:
+        ids, data, cards = (sets.ids[sel], sets.concat[gather_rows(sets, sel)],
+                            sets.cards[sel])
+    scores = M.SET_METRICS_BATCH[metric](qmat, data, cards)
+    top = np.lexsort((ids, -scores))[:k]
+    return ids[top], scores[top]
+
+
+def _proposed(qsids: pd.Series) -> Iterator[tuple]:
+    """(query set id, positions of the batch rows it proposed) for each
+    query set listed in a batch's ``qsids`` column."""
+    lens = np.fromiter((len(x) for x in qsids), dtype=np.int64,
+                       count=len(qsids))
+    if not lens.sum():
+        return
+    qs = np.concatenate([np.asarray(x, dtype=np.int64) for x in qsids])
+    rows = np.repeat(np.arange(len(qsids)), lens)
+    order = np.argsort(qs, kind="stable")
+    qs, rows = qs[order], rows[order]
+    cuts = np.flatnonzero(np.diff(qs)) + 1
+    yield from zip(qs[np.concatenate(([0], cuts))].tolist(),
+                   np.split(rows, cuts))
+
+
+_PAIR_SCHEMA = StructType([
+    StructField("query_set_id", LongType()),
+    StructField("data_set_id", LongType()),
+    StructField("score", DoubleType()),
+])
 
 
 def _scan_topk(query_vecs, sets: DataFrame, k: int, metric: str,
                set_id: str = "set_id", pos: str | None = None,
                vec_col: str = "vec") -> DataFrame:
-    """The one set scorer: ``sets`` (set_id, mat[, qsids]) streamed one
-    Arrow batch at a time against the broadcast query sets, a per-batch
-    top-k per query set, then the global ``grouped_topk`` merge. With a
-    ``qsids`` column a query set scores only the rows that list it,
-    gathered from the batch's stacked members by offset."""
+    """``sets`` (set_id, mat[, qsids]) streamed one Arrow batch at a time
+    against the broadcast query sets through ``topk_of``, then the
+    global ``grouped_topk`` merge. With a ``qsids`` column a query set
+    scores only the rows that list it."""
     if metric not in M.SET_METRICS_BATCH:
         raise ValueError(f"unknown metric {metric!r}")
     from ..util import cached_broadcast
@@ -206,41 +277,24 @@ def _scan_topk(query_vecs, sets: DataFrame, k: int, metric: str,
               fetch_grouped_sets(query_vecs, set_id, pos, vec_col)))
     proposed = "qsids" in sets.columns
 
-    schema = StructType([
-        StructField("query_set_id", LongType()),
-        StructField("data_set_id", LongType()),
-        StructField("score", DoubleType()),
-    ])
-
     def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_sets_l, met, kk = bc.value, metric, k
-        fn = M.SET_METRICS_BATCH[met]
-        q_mats = dict(q_sets_l) if proposed else None
+        q_mats = dict(bc.value)
         for pdf in it:
-            d_ids = pdf["set_id"].to_numpy(dtype=np.int64)
-            mats = [np.stack([np.asarray(r, dtype=np.float64) for r in m])
-                    for m in pdf["mat"]]
-            cards = np.array([m.shape[0] for m in mats], dtype=np.int64)
-            concat = np.vstack(mats)
-            work = (_proposed(pdf["qsids"], q_mats, d_ids, concat, cards)
-                    if proposed else
-                    ((q, qmat, d_ids, concat, cards) for q, qmat in q_sets_l))
+            batch = _decode_sets(pdf)
+            work = (_proposed(pdf["qsids"]) if proposed
+                    else ((q, None) for q in q_mats))
             frames = []
-            for qid, qmat, ids, data, data_cards in work:
-                scores = fn(qmat, data, data_cards)
-                kk_eff = min(kk, len(scores))
-                # deterministic tiebreak (score desc, id asc) — see
-                # brute_force.py: argpartition drops ties arbitrarily
-                top = np.lexsort((ids, -scores))[:kk_eff]
+            for qid, sel in work:
+                ids, scores = topk_of(metric, q_mats[qid], batch, sel, k)
                 frames.append(pd.DataFrame({
-                    "query_set_id": np.full(kk_eff, qid, dtype=np.int64),
-                    "data_set_id": ids[top],
-                    "score": scores[top],
+                    "query_set_id": np.full(len(ids), qid, dtype=np.int64),
+                    "data_set_id": ids,
+                    "score": scores,
                 }))
             if frames:
                 yield pd.concat(frames)
 
-    partials = sets.mapInPandas(score_batches, schema=schema)
+    partials = sets.mapInPandas(score_batches, schema=_PAIR_SCHEMA)
     return grouped_topk(
         partials, ["query_set_id"],
         [F.col("score").desc(), F.col("data_set_id").asc()], k,

@@ -11,8 +11,10 @@ from pyspark.sql import functions as F
 
 from cross_modal_multivector_search_spark import testdata as TD
 from cross_modal_multivector_search_spark.operators import (
-    _roar_core as core, graph_build, graph_search, recall, set_search,
+    _roar_core as core, graph_build, graph_search, recall, rerank,
+    set_search,
 )
+from cross_modal_multivector_search_spark.plans import plan_text
 
 from conftest import SF_SMOKE
 
@@ -186,3 +188,100 @@ def test_graph_save_load_roundtrip(spark, index_and_vecs, tmp_path):
     assert len(loaded.adj) == len(index.adj)
     for a, b in zip(loaded.adj, index.adj):
         assert list(a) == list(b)
+
+
+# A budget well below saturation: each query set proposes only part of
+# the 100 data sets, so the candidate -> set gather is exercised.
+_PARTIAL = graph_search.SearchParams(min_pq=5, max_pq=60, budget=60)
+
+
+def _ranked(df):
+    return df.toPandas().sort_values(["query_set_id", "rank"]) \
+        .reset_index(drop=True)
+
+
+def _fused_equals_two_phase(index, q, data, params=_PARTIAL, **kw):
+    """The fused search_and_rerank against multivector_search +
+    rerank.rerank: same ids and ranks, scores within 1e-12."""
+    fused = _ranked(graph_search.search_and_rerank(
+        index, q, data, 10, params, **kw))
+    cands = graph_search.multivector_search(index, q, params)
+    want = _ranked(rerank.rerank(
+        cands.select("query_set_id", "base_vec_id"), q, data, 10, **kw))
+    assert len(fused) > 0
+    cols = ["query_set_id", "rank", "data_set_id"]
+    assert np.array_equal(fused[cols].to_numpy(), want[cols].to_numpy())
+    assert np.abs(fused["score"] - want["score"]).max() <= 1e-12
+    return fused
+
+
+@pytest.mark.parametrize("metric", ["smooth_chamfer",
+                                    "summed_max_similarity"])
+def test_fused_search_and_rerank_equals_two_phase(index_and_vecs, metric):
+    index, vecs = index_and_vecs
+    q = vecs.filter(F.col("set_id") < 12)
+    out = _fused_equals_two_phase(index, q, vecs, metric=metric,
+                                  m=TD.M_FIXED)
+    assert set(out["query_set_id"]) == set(range(12))
+
+
+def test_fused_search_and_rerank_variable_cardinality(spark,
+                                                     index_and_vecs):
+    """Sets of 1..4 members through the cardinality mapping; the index
+    also holds vids no range covers, which drop as the range join drops
+    them."""
+    from cross_modal_multivector_search_spark.operators import mapping
+    index, vecs = index_and_vecs
+    v = vecs.filter(F.col("vec_id") < 200).drop("set_id")
+    m_map = mapping.cardinality_mapping_local(
+        spark, [(s, 1 + s % 4) for s in range(80)])
+    data = mapping.vid_to_vsid_variable(v, m_map)
+    q = data.filter(F.col("set_id").isin(1, 2, 7, 30))
+    _fused_equals_two_phase(index, q, data, mapping=m_map)
+
+
+def test_fused_search_and_rerank_shared_visited(index_and_vecs):
+    index, vecs = index_and_vecs
+    q = vecs.filter(F.col("set_id") < 8)
+    _fused_equals_two_phase(
+        index, q, vecs,
+        graph_search.SearchParams(min_pq=5, max_pq=60, budget=60,
+                                  shared_visited=True),
+        m=TD.M_FIXED)
+
+
+def test_fused_search_and_rerank_drops_sets_missing_from_data(
+        index_and_vecs):
+    """Proposed sets absent from data_vecs drop out, as the rerank's
+    join drops them."""
+    index, vecs = index_and_vecs
+    q = vecs.filter(F.col("set_id") < 8)
+    data = vecs.filter(F.col("set_id") % 2 == 0)
+    out = _fused_equals_two_phase(index, q, data, m=TD.M_FIXED)
+    assert (out["data_set_id"] % 2 == 0).all()
+
+
+def test_fused_search_and_rerank_scores_from_data_vecs(index_and_vecs):
+    """Candidates come from the index, scores from data_vecs: with data
+    vectors unlike the index's, the fused stage still equals the two
+    phases and differs from scoring the index's own vectors."""
+    index, vecs = index_and_vecs
+    q = vecs.filter(F.col("set_id") < 8)
+    data = vecs.withColumn("vec", F.reverse("vec"))
+    out = _fused_equals_two_phase(index, q, data, m=TD.M_FIXED)
+    own = _ranked(graph_search.search_and_rerank(
+        index, q, vecs, 10, _PARTIAL, m=TD.M_FIXED))
+    assert np.abs(out["score"] - own["score"]).max() > 1e-3
+
+
+def test_fused_search_and_rerank_is_one_python_stage(index_and_vecs):
+    """One MapInPandas (search, gather, score and top-k together) and no
+    Exchange above it: no candidate shuffle and no top-k merge."""
+    index, vecs = index_and_vecs
+    df = graph_search.search_and_rerank(
+        index, vecs.filter(F.col("set_id") < 4), vecs, 10, _PARTIAL,
+        m=TD.M_FIXED)
+    lines = plan_text(df, "simple").splitlines()
+    py = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    assert len(py) == 1, "\n".join(lines)
+    assert not any("Exchange" in ln for ln in lines[:py[0]])

@@ -41,13 +41,9 @@ def main() -> None:
     def ann_window_b1600(spark, sf_dir):
         index = E._roar_index(spark, sf_dir)
         q, v = E._queries_norm(spark, sf_dir)
-        kw = {}
-        if "q_sets" in _gs.search_and_rerank.__code__.co_varnames:
-            kw["q_sets"] = E._qsets("fixed", sf_dir, q)
         return _gs.search_and_rerank(
             index, q, v, E.K,
-            _gs.SearchParams(min_pq=5, max_pq=1600, budget=1600), m=E.M,
-            **kw)
+            _gs.SearchParams(min_pq=5, max_pq=1600, budget=1600), m=E.M)
 
     extra = {"hnsw_search_b400": hnsw_b400,
              "ann_window_search_b1600": ann_window_b1600}
